@@ -1,10 +1,11 @@
 package graft.expressions
 
-import graft.streaming.{FrameSerde, Msgpack}
+import graft.streaming.FrameSerde
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.graftbridge.Bridge.AbstractType
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
@@ -34,27 +35,20 @@ case class MsgpackDecodeFrame(child: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "msgpack_decode_frame"
 
+  // One copy of the field rules (nil/Number coercion, read-side
+  // defaults): FrameSerde.decodeMsgpack. This only re-shapes its
+  // FrameMessage as a row.
   protected override def nullSafeEval(input: Any): Any = {
     try {
-      val m = Msgpack.decodeMap(input.asInstanceOf[Array[Byte]])
-      // Lenient parse: the reference emits offset-less UTC timestamps.
-      val inst = FrameSerde.parseInstant(m("timestamp").asInstanceOf[String])
-      val tsMicros = inst.getEpochSecond * 1000000L + inst.getNano / 1000L
+      val f = FrameSerde.decodeMsgpack(input.asInstanceOf[Array[Byte]])
       InternalRow(
-        UTF8String.fromString(m("video_id").asInstanceOf[String]),
-        // Number coercion, like every numeric field below: a
-        // float-packed frame_number must decode here exactly as it
-        // does in FrameSerde.decodeMsgpack, not null the whole row
-        // via the catch-all while the DataFrame path keeps the frame.
-        (m("frame_number") match { case n: Number => n.intValue; case _ => 0 }),
-        tsMicros,
-        // numeric fields coerce any packed width (msgpack ints decode
-        // to Long, a nil slot to null) — same read-side leniency as
-        // FrameSerde.decodeMsgpack; nil falls to the backfill default
-        (m.get("fps") match { case Some(n: Number) => n.doubleValue; case _ => 30.0 }),
-        m("frame_data").asInstanceOf[Array[Byte]],
-        (m.get("width") match { case Some(n: Number) => n.intValue; case _ => 0 }),
-        (m.get("height") match { case Some(n: Number) => n.intValue; case _ => 0 }))
+        UTF8String.fromString(f.video_id),
+        f.frame_number,
+        DateTimeUtils.fromJavaTimestamp(f.timestamp),
+        f.fps,
+        f.frame_data,
+        f.width,
+        f.height)
     } catch {
       case _: Exception => null // malformed envelope → null row
     }

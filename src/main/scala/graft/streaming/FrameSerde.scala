@@ -93,11 +93,11 @@ object FrameSerde {
     FrameMessage(
       video_id = m("video_id").asInstanceOf[String],
       // Numeric fields coerce through Number and map nil (→ null) to
-      // the documented default — same contract as the codegen'd
-      // MsgpackDecodeFrame expression, so the two decode paths can't
-      // drift: a nil width is 0 BY RULE (not by accidental null
-      // unboxing), and any non-Long numeric packing decodes instead
-      // of throwing per message.
+      // the documented default: a nil width is 0 BY RULE (not by
+      // accidental null unboxing), and any non-Long numeric packing
+      // decodes instead of throwing per message. The
+      // MsgpackDecodeFrame expression calls this method, so the
+      // DataFrame and expression decode paths share these rules.
       frame_number = m("frame_number") match {
         case n: Number => n.intValue; case _ => 0
       },
@@ -115,9 +115,9 @@ object FrameSerde {
   }
 
   /** DataFrame stage: binary `value` column → typed frames (msgpack). */
-  def decodeMsgpackDF(df: DataFrame, valueCol: String = "value"): DataFrame = {
+  def decodeMsgpackDF(df: DataFrame): DataFrame = {
     import df.sparkSession.implicits._
-    df.select(col(valueCol).as[Array[Byte]])
+    df.select(col("value").as[Array[Byte]])
       .mapPartitions(_.map(decodeMsgpack))
       .toDF()
   }

@@ -18,9 +18,9 @@ object Jobs {
   final case class DetectOutputs(detections: DataFrame, completions: DataFrame)
 
   /** §3.2 core: frames → keyed state machine → (detections,
-    * completions). Batch flavor; the streaming flavor is
-    * `VideoSessionProcessor.processStream` with the same transforms
-    * downstream. */
+    * completions) over `VideoSessionProcessor.processBatch`. A stream
+    * runs the same state machine through `processStream` (the one
+    * streaming wiring) and splits its events with [[split]]. */
   def detect(
       frames: Dataset[FrameIn],
       cfg: Config = Config(),

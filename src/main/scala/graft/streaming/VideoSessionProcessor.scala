@@ -9,8 +9,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 /** The per-video keyed state machine — the heart of the reference's
   * stream processor (SURVEY.md §2.1 A1–A6), as one pure transition
-  * function shared by the batch and streaming `flatMapGroupsWithState`
-  * wirings:
+  * function behind two wirings: `processBatch` (secondary sort over a
+  * bounded input) and `processStream` (`flatMapGroupsWithState`, the
+  * one streaming wiring):
   *
   *  - A1 init-on-first-frame;
   *  - A2 running max(frame_number);
@@ -51,6 +52,10 @@ object VideoSessionProcessor {
       // completion ids/filepaths); after it the key's state is
       // reclaimed — bounded state, not a forever-tombstone.
       markerTtlMs: Long = 600000L)
+
+  /** Frames per `transition` call (= per predictBatch) in `processBatch`. */
+  private val BatchFrames = 64
+  private val BatchProcessingTs = new Timestamp(0L)
 
   /** Minimal frame input for the state machine (payload dropped after
     * decode/inference upstream). */
@@ -112,8 +117,8 @@ object VideoSessionProcessor {
     // the sessionIndex walk, collect every cadence-selected frame, and
     // score them in ONE Backend.predictBatch call — the batched
     // forward-pass win the Backend contract exists for; a per-frame
-    // call could never amortize model dispatch. The streaming wirings
-    // hand transition the whole per-trigger group slice, so the batch
+    // call could never amortize model dispatch. The streaming wiring
+    // hands transition the whole per-trigger group slice, so the batch
     // here is the trigger's worth of selected frames.
     val preds = {
       val sel = Seq.newBuilder[(String, Int, Int, Int)]
@@ -206,7 +211,7 @@ object VideoSessionProcessor {
   /** Batch wiring: secondary-sort shape — hash-partition on video_id,
     * sort WITHIN partitions by (video_id, frame_number), then stream
     * each partition through the same pure `transition` in bounded
-    * same-key runs of `batchFrames`. Every session closes at
+    * same-key runs of `BatchFrames`. Every session closes at
     * end-of-key (the batch analog of the drain path A10).
     *
     * Why runs, not single frames: `transition`'s A5 pre-pass scores
@@ -214,22 +219,22 @@ object VideoSessionProcessor {
     * `Backend.predictBatch` call — the forward-pass amortization a
     * real model needs most on exactly this backfill path. Feeding it
     * one frame at a time would cap every inference batch at 1; runs
-    * of `batchFrames` restore batching while keeping task memory
-    * bounded (≤ batchFrames frames buffered, state still O(1)/key).
-    * The streaming wirings batch per trigger slice the same way.
+    * of `BatchFrames` restore batching while keeping task memory
+    * bounded (≤ BatchFrames frames buffered, state still O(1)/key).
+    * The streaming wiring batches per trigger slice the same way.
+    * Run boundaries cannot change the output: folding `transition`
+    * over any slicing of a key's frames gives the same events and
+    * final state (TransitionSpec checks this). Detections carry
+    * `BatchProcessingTs` — a batch run has no trigger instant.
     *
     * Why not groupByKey+flatMapGroups: that wiring must buffer a whole
     * key's frames in task memory to sort them (a 10M-frame video = a
     * per-task memory spike). Here the sort runs in Spark's spillable
-    * shuffle sorter, exactly as the streaming wirings advertise — the
-    * iterator never materializes a group. */
+    * shuffle sorter — the iterator never materializes a group. */
   def processBatch(
       frames: Dataset[FrameIn],
       cfg: Config = Config(),
-      model: Backend = FireModel.SyntheticFireModel(),
-      processingTs: Timestamp = new Timestamp(0L),
-      batchFrames: Int = 64): Dataset[VideoEvent] = {
-    require(batchFrames >= 1, s"batchFrames must be >= 1, got $batchFrames")
+      model: Backend = FireModel.SyntheticFireModel()): Dataset[VideoEvent] = {
     implicit val evEnc = Encoders.product[VideoEvent]
     frames
       .repartition(org.apache.spark.sql.functions.col("video_id"))
@@ -253,13 +258,13 @@ object VideoSessionProcessor {
               if (in.hasNext && (curVid == null || in.head.video_id == curVid)) {
                 curVid = in.head.video_id
                 // bounded same-key run: one transition (= one
-                // predictBatch) per ≤ batchFrames frames
+                // predictBatch) per ≤ BatchFrames frames
                 val run = scala.collection.mutable.ArrayBuffer.empty[FrameIn]
-                while (run.size < batchFrames && in.hasNext &&
+                while (run.size < BatchFrames && in.hasNext &&
                     in.head.video_id == curVid)
                   run += in.next()
                 val (ns, events) =
-                  transition(curVid, st, run.toSeq, cfg, model, processingTs)
+                  transition(curVid, st, run.toSeq, cfg, model, BatchProcessingTs)
                 st = ns
                 out = events.iterator
               } else { // key change or end of partition: drain the session
@@ -272,87 +277,6 @@ object VideoSessionProcessor {
           def next(): VideoEvent = { advance(); out.next() }
         }
       }
-  }
-
-  /** Spark 4 `transformWithState` wiring — same transition function
-    * behind the current-generation stateful API: typed ValueState in
-    * the state store (RocksDB provider at scale) and a processing-time
-    * timer per key for the idle-close path (re-armed on every input
-    * batch, exactly like fMGWS's setTimeoutDuration). */
-  class VideoTwsProcessor(cfg: Config, model: Backend)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, FrameIn, VideoEvent] {
-    import org.apache.spark.sql.streaming.{OutputMode => OM, TimeMode => TM, TTLConfig}
-
-    @transient private var state: org.apache.spark.sql.streaming.ValueState[VideoState] = _
-    @transient private var timer: org.apache.spark.sql.streaming.ValueState[Long] = _
-    private var withTimers: Boolean = false
-
-    override def init(outputMode: OM, timeMode: TM): Unit = {
-      state = getHandle.getValueState[VideoState](
-        "videoState", Encoders.product[VideoState], TTLConfig.NONE)
-      // value equality against the API's own constructor — a string
-      // compare on the rendering would silently disable timers if the
-      // case object's toString ever changed
-      withTimers = timeMode == TM.ProcessingTime()
-      if (withTimers)
-        timer = getHandle.getValueState[Long](
-          "idleTimer", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[FrameIn],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[VideoEvent] = {
-      val sorted = rows.toSeq.sortBy(f => (f.frame_number, f.timestamp_us))
-      val prev = if (state.exists()) Some(state.get()) else None
-      val (st, events) = transition(
-        key, prev, sorted, cfg, model,
-        new Timestamp(timerValues.getCurrentProcessingTimeInMs()))
-      st.foreach(state.update)
-      if (withTimers) {
-        if (timer.exists()) getHandle.deleteTimer(timer.get())
-        val next = timerValues.getCurrentProcessingTimeInMs() + cfg.idleTimeoutMs
-        getHandle.registerTimer(next)
-        timer.update(next)
-      }
-      events.iterator
-    }
-
-    override def handleExpiredTimer(
-        key: String,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[VideoEvent] = {
-      val open = if (state.exists()) Some(state.get()).filter(_.frameCount > 0L) else None
-      open match {
-        case Some(s) => // close + keep the marker for the TTL horizon
-          state.update(closedMarker(s))
-          val next = timerValues.getCurrentProcessingTimeInMs() + cfg.markerTtlMs
-          getHandle.registerTimer(next)
-          if (timer != null) timer.update(next)
-          Iterator.single(VideoEvent("completion", None, Some(completionOf(key, s))))
-        case None => // marker (or nothing) expired: forget the key
-          state.clear()
-          if (timer != null) timer.clear()
-          Iterator.empty
-      }
-    }
-  }
-
-  def processStreamTws(
-      frames: Dataset[FrameIn],
-      cfg: Config = Config(),
-      model: Backend = FireModel.SyntheticFireModel(),
-      idleClose: Boolean = false): Dataset[VideoEvent] = {
-    implicit val evEnc = Encoders.product[VideoEvent]
-    import frames.sparkSession.implicits._
-    val timeMode =
-      if (idleClose) org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-      else org.apache.spark.sql.streaming.TimeMode.None()
-    frames.groupByKey(_.video_id)
-      .transformWithState(
-        new VideoTwsProcessor(cfg, model),
-        timeMode,
-        org.apache.spark.sql.streaming.OutputMode.Append())
   }
 
   /** Streaming wiring: state persists across micro-batches; idle keys

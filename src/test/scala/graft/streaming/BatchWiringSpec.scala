@@ -30,6 +30,30 @@ class BatchWiringSpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** Reference: the same pure transition over each whole sorted
+    * group at once, then the end-of-key close. */
+  private def reference(frames: Seq[FrameIn], cfg: Config): Seq[Schemas.VideoEvent] =
+    frames.groupBy(_.video_id).toSeq.flatMap { case (vid, fs) =>
+      val sorted = fs.sortBy(f => (f.frame_number, f.timestamp_us))
+      val (st, events) = VideoSessionProcessor.transition(
+        vid, None, sorted, cfg, FireModel.SyntheticFireModel(), new Timestamp(0L))
+      events ++ st.map(s =>
+        Schemas.VideoEvent("completion", None, Some(VideoSessionProcessor.completionOf(vid, s))))
+    }
+
+  private def assertSameEvents(got: Seq[Schemas.VideoEvent], expected: Seq[Schemas.VideoEvent]): Unit = {
+    def detKey(e: Schemas.VideoEvent) = e.detection.map(d =>
+      (d.video_id, d.frame_number, d.session_id, d.session_index,
+        d.inference_ran, d.has_fire, d.fire_probability, d.heatmap_computed))
+    def compKey(e: Schemas.VideoEvent) = e.completion.map(c =>
+      (c.video_id, c.stats.total_frames, c.stats.fire_count, c.stats.max_fire_probability))
+    assert(got.length == expected.length)
+    assert(got.flatMap(detKey).sortBy(d => (d._1, d._2)) ==
+      expected.flatMap(detKey).sortBy(d => (d._1, d._2)))
+    assert(got.flatMap(compKey).sortBy(c => (c._1, c._2)) ==
+      expected.flatMap(compKey).sortBy(c => (c._1, c._2)))
+  }
+
   test("processBatch equals the per-key transition applied to sorted groups") {
     val cfg = Config(gapFrames = 10, inferEveryN = 3)
     // interleaved keys, shuffled frame order, one gap per key —
@@ -41,56 +65,27 @@ class BatchWiringSpec extends SparkSpec {
         i <- 0 to 24
       } yield FrameIn(vid, if (i > 12) i + 50 else i, i * 1000L)).toList)
     val got = VideoSessionProcessor.processBatch(frames.toDS(), cfg).collect()
-
-    // reference: same pure transition, whole sorted group at once
-    val expected = frames.groupBy(_.video_id).toSeq.flatMap { case (vid, fs) =>
-      val sorted = fs.sortBy(f => (f.frame_number, f.timestamp_us))
-      val (st, events) = VideoSessionProcessor.transition(
-        vid, None, sorted, cfg, FireModel.SyntheticFireModel(), new Timestamp(0L))
-      events ++ st.map(s =>
-        Schemas.VideoEvent("completion", None, Some(VideoSessionProcessor.completionOf(vid, s))))
-    }
-
-    def detKey(e: Schemas.VideoEvent) = e.detection.map(d =>
-      (d.video_id, d.frame_number, d.session_id, d.session_index,
-        d.inference_ran, d.has_fire, d.fire_probability, d.heatmap_computed))
-    def compKey(e: Schemas.VideoEvent) = e.completion.map(c =>
-      (c.video_id, c.stats.total_frames, c.stats.fire_count, c.stats.max_fire_probability))
-
-    assert(got.length == expected.length)
-    assert(got.flatMap(detKey).sortBy(d => (d._1, d._2)).toSeq ==
-      expected.flatMap(detKey).sortBy(d => (d._1, d._2)).toSeq)
-    assert(got.flatMap(compKey).sortBy(c => (c._1, c._2)).toSeq ==
-      expected.flatMap(compKey).sortBy(c => (c._1, c._2)).toSeq)
+    assertSameEvents(got.toSeq, reference(frames, cfg))
   }
 
   test("chunked runs feed predictBatch real batches and keep outputs identical") {
     // VERDICT r4 "what's wrong" #1: the old wiring called transition
     // with Seq(f) — every inference batch had size ≤ 1, defeating the
     // A5 amortization exactly on the backfill path where it matters.
-    // Assert (a) per-frame (batchFrames=1) and chunked (64) outputs
-    // are identical, (b) the chunked run actually hands the backend
-    // multi-frame batches bounded by the chunk size.
+    // Assert (a) the chunked run hands the backend multi-frame batches
+    // bounded by the chunk size, (b) keys longer than one chunk still
+    // give the whole-group output (that any slicing of a key leaves
+    // transition's output unchanged is TransitionSpec's property).
     val cfg = Config(gapFrames = 10, inferEveryN = 2)
     val frames = (for {
       vid <- Seq("x", "y")
       i <- 0 until 300
     } yield FrameIn(vid, if (i > 150) i + 40 else i, i * 1000L)).toList
 
-    def run(chunk: Int, m: FireModel.Backend) =
-      VideoSessionProcessor.processBatch(frames.toDS(), cfg, m,
-          new Timestamp(0L), batchFrames = chunk)
-        .collect().map(e => (e.kind,
-          e.detection.map(d => (d.video_id, d.frame_number, d.session_id,
-            d.session_index, d.inference_ran, d.has_fire, d.fire_probability)),
-          e.completion.map(c => (c.video_id, c.stats.total_frames,
-            c.stats.fire_count, c.stats.max_fire_probability))))
-        .sortBy(_.toString)
-
     BatchWiringSpec.batchSizes.clear()
-    val chunked = run(64, BatchWiringSpec.CountingModel())
-    val perFrame = run(1, FireModel.SyntheticFireModel())
-    assert(chunked.toSeq == perFrame.toSeq)
+    val got = VideoSessionProcessor.processBatch(
+      frames.toDS(), cfg, BatchWiringSpec.CountingModel()).collect()
+    assertSameEvents(got.toSeq, reference(frames, cfg))
 
     val sizes = BatchWiringSpec.batchSizes.toArray(Array.empty[Integer]).map(_.toInt)
     // 64-frame runs at inferEveryN=2 select 32 frames (33 in the run

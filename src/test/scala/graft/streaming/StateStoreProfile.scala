@@ -4,7 +4,8 @@ import graft.SparkSpec
 
 /** Shared state-store provider-profile scaffolding for the streaming
   * suites that run twice (default HDFS-backed store and RocksDB — the
-  * 100-TB configuration). One copy of the conf-key plumbing so the
+  * 100-TB configuration) and for single tests that pin a provider
+  * (`withProvider`). One copy of the conf-key plumbing so the
   * profiles cannot drift between suites.
   */
 trait StateStoreProfile extends org.scalatest.BeforeAndAfterAll {

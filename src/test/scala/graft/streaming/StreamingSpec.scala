@@ -286,64 +286,6 @@ abstract class StreamingSpecBase extends SparkSpec with StateStoreProfile {
     } finally query.stop()
   }
 
-  test("transformWithState (Spark 4 API, RocksDB store) matches fMGWS semantics") {
-    implicit val sqlCtx = spark.sqlContext
-    withProvider(
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      val input = MemoryStream[FrameIn]
-      val events = VideoSessionProcessor.processStreamTws(
-        input.toDS(), Config(inferEveryN = 3))
-      val query = events.writeStream.format("memory").queryName("tws_events")
-        .outputMode(OutputMode.Append()).start()
-      try {
-        input.addData(FrameIn("v1", 0, 0L), FrameIn("v1", 1, 1000L))
-        query.processAllAvailable()
-        input.addData(FrameIn("v1", 2, 2000L), FrameIn("v1", 3, 3000L))
-        query.processAllAvailable()
-        val dets = spark.table("tws_events")
-          .where($"kind" === "detection").select($"detection.*")
-          .orderBy($"frame_number").collect()
-        // identical to the fMGWS expectations: one continuous session
-        assert(dets.map(_.getAs[Long]("session_index")).toSeq == Seq(0L, 1L, 2L, 3L))
-        assert(dets.map(_.getAs[Boolean]("inference_ran")).toSeq ==
-          Seq(true, false, false, true))
-      } finally query.stop()
-    }
-  }
-
-  test("transformWithState timer closes an idle video (RocksDB store)") {
-    implicit val sqlCtx = spark.sqlContext
-    withProvider(
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      val input = MemoryStream[FrameIn]
-      val events = VideoSessionProcessor.processStreamTws(
-        input.toDS(), Config(inferEveryN = 3, idleTimeoutMs = 500L), idleClose = true)
-      val query = events.writeStream.format("memory").queryName("tws_timer_events")
-        .outputMode(OutputMode.Append()).start()
-      try {
-        // pure polling throughout: with TimeMode.ProcessingTime the
-        // engine self-triggers batches (which also fire due timers),
-        // and processAllAvailable never settles under that.
-        input.addData(FrameIn("v1", 0, 0L), FrameIn("v1", 1, 1000L))
-        val deadline = System.currentTimeMillis() + 60000L
-        def table() = spark.table("tws_timer_events")
-        def dets() = table().where($"kind" === "detection").count()
-        while (dets() < 2 && System.currentTimeMillis() < deadline) Thread.sleep(150L)
-        assert(dets() == 2)
-        def comps() = table()
-          .where($"kind" === "completion" && $"completion.video_id" === "v1")
-          .select($"completion.*").collect()
-        var c = comps()
-        while (c.isEmpty && System.currentTimeMillis() < deadline) {
-          Thread.sleep(250L); c = comps()
-        }
-        assert(c.length == 1)
-        assert(c.head.getAs[org.apache.spark.sql.Row]("stats")
-          .getAs[Long]("total_frames") == 2L)
-      } finally query.stop()
-    }
-  }
-
   test("stream-static join enriches a frame stream with a dimension table") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Int)]

@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.streaming.FireModel.{Backend, FramePrediction}
-import graft.streaming.Schemas.Detection
+import graft.streaming.Schemas.{Detection, VideoState}
 import graft.streaming.VideoSessionProcessor.{Config, FrameIn, transition}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -111,5 +111,33 @@ class TransitionSpec extends AnyFunSuite {
     assert(dets.map(_.session_index) == Seq(0, 1, 2, 3))
     assert(dets.map(_.inference_ran) == Seq(true, false, false, true))
     assert(st2.get.frameCount == 4)
+  }
+
+  test("slicing invariance: any split of a key's frames gives the same events and state") {
+    // The invariant both wirings rely on: processBatch cuts a key into
+    // fixed-size runs, processStream into whatever each trigger holds.
+    // Gaps (session closes), cadence and GradCAM runs all straddle
+    // slice boundaries here.
+    val cfg = Config(gapFrames = 50, inferEveryN = 3, gradcamEveryN = 2)
+    val model = Scripted((0 until 600).filter(n => (n / 5) % 3 == 0).toSet)
+    val all = frames("v1", (0 until 200) ++ (260 until 360) ++ (500 until 540): _*)
+    def fold(start: Option[VideoState], size: Int) =
+      all.grouped(size).foldLeft((start, Vector.empty[Schemas.VideoEvent])) {
+        case ((st, acc), slice) =>
+          val (next, events) = transition("v1", st, slice, cfg, model, ts)
+          (next, acc ++ events)
+      }
+    val (prior, _) = transition("v1", None, frames("v1", 0, 1), cfg, model, ts)
+    for (start <- Seq(None, prior.map(VideoSessionProcessor.closedMarker))) {
+      val (wholeSt, wholeEv) = fold(start, all.size)
+      assert(wholeEv.count(_.kind == "completion") == 2)
+      for (size <- Seq(1, 7, 64)) {
+        val (st, ev) = fold(start, size)
+        assert(ev.size == wholeEv.size)
+        val i = ev.zip(wholeEv).indexWhere { case (a, b) => a != b }
+        if (i >= 0) fail(s"slices of $size from $start: event $i is ${ev(i)}, whole-group ${wholeEv(i)}")
+        assert(st == wholeSt, s"slices of $size from $start")
+      }
+    }
   }
 }
